@@ -2172,296 +2172,6 @@ def _q_image_decode(spark, sf_dir):
     return multimodal.decode_image(blobs)
 
 
-def _latest_graded_round() -> dict[str, tuple[int, bool]]:
-    """Newest driver-grading round per query name — and whether that
-    newest grade was green — parsed from the committed
-    ``CORRECTNESS_r*.json`` snapshots next to this file.
-
-    Returns ``name -> (round, last_grade_was_green)``.  Green means the
-    newest record has ``err is None`` and ``hash_match is True``; a
-    ``no_oracle`` rows-only record, a failed hash, or a hard error all
-    count as not-green so the rotation re-grades them first.  Names
-    absent from every snapshot have never been graded and map to
-    ``(0, False)``.  Any parse/read failure degrades to "never graded"
-    for the affected file — the rotation then just preserves
-    registration order, which is a safe static fallback.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    latest: dict[str, tuple[int, bool]] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path, encoding="utf-8") as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            green = (
-                isinstance(rec, dict)
-                and rec.get("err") is None
-                and rec.get("hash_match") is True
-            )
-            prev = latest.get(name, (0, False))
-            if rnd >= prev[0]:
-                latest[name] = (rnd, green)
-    return latest
-
-
-def _git_out(args: list[str]) -> str:
-    """Run git in the repo root and return stdout; raises on any
-    failure (callers degrade to 'cannot tell', never to a crash)."""
-    import os
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    return subprocess.run(
-        ["git", *args],
-        cwd=here,
-        capture_output=True,
-        text=True,
-        timeout=30,
-        check=True,
-    ).stdout
-
-
-def _grade_treeish(rnd: int) -> str:
-    """The tree the driver actually graded for round ``rnd``: the
-    parent of the oldest commit touching ``CORRECTNESS_r{rnd}.json``
-    (the driver grades the end-of-round snapshot commit, then commits
-    the grade files on top of it).  If the two were ever squashed the
-    parent is one commit too early — which only flags a query as
-    changed when it changed in the graded round itself: the safe
-    direction (an extra re-grade, never a missed one)."""
-    first = _git_out(
-        ["rev-list", "--reverse", "HEAD", "--", f"CORRECTNESS_r{rnd}.json"]
-    ).split()[0]
-    return first + "^"
-
-
-def _fn_sources(text: str) -> dict[str, str]:
-    """name -> exact source segment for every top-level function in a
-    version of this file (AST-extracted, so surrounding-file churn —
-    new oracles, new registrations — does not count as a change)."""
-    import ast
-
-    tree = ast.parse(text)
-    return {
-        n.name: ast.get_source_segment(text, n)
-        for n in tree.body
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-    }
-
-
-def _module_paths() -> dict[str, str]:
-    """alias -> repo-relative path for every k8stream_spark module (or
-    top-level-imported function's owning module) visible in this file's
-    namespace.  Drives the 'owning module' attribution below."""
-    import inspect
-    import os
-    import sys
-    import types
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    out: dict[str, str] = {}
-    for alias, obj in list(globals().items()):
-        mod = None
-        if isinstance(obj, types.ModuleType) and obj.__name__.startswith(
-            "k8stream_spark"
-        ):
-            mod = obj
-        elif callable(obj) and getattr(obj, "__module__", "").startswith(
-            "k8stream_spark"
-        ):
-            mod = sys.modules.get(obj.__module__)
-        if mod is None:
-            continue
-        try:
-            out[alias] = os.path.relpath(inspect.getfile(mod), here)
-        except TypeError:
-            continue
-    return out
-
-
-def _owned_paths(src: str, alias_paths: dict[str, str]) -> set[str]:
-    """Repo-relative module files a query function's source depends on:
-    top-level aliases it references plus in-function
-    ``from k8stream_spark... import X`` targets."""
-    import importlib
-    import inspect
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = {
-        p
-        for alias, p in alias_paths.items()
-        if re.search(rf"\b{re.escape(alias)}\b", src)
-    }
-    # names restricted to the import's own line (a multi-line-greedy
-    # class here once swallowed the function body and mis-attributed
-    # every in-function import to the package __init__)
-    for m in re.finditer(
-        r"from\s+(k8stream_spark[\w.]*)\s+import\s+\(?([^\n)]+)", src
-    ):
-        pkg, names = m.group(1), m.group(2)
-        for nm in names.split(","):
-            nm = nm.strip().split(" as ")[0].strip()
-            if not nm.isidentifier():
-                continue
-            try:
-                mod = importlib.import_module(f"{pkg}.{nm}")
-            except ModuleNotFoundError:
-                mod = importlib.import_module(pkg)
-            paths.add(os.path.relpath(inspect.getfile(mod), here))
-    return paths
-
-
-def _blobs_at(treeish: str, paths: set[str]) -> dict[str, str]:
-    """path -> git blob sha at ``treeish`` (one batched ls-tree)."""
-    out = _git_out(["ls-tree", "-r", treeish, "--", *sorted(paths)])
-    res: dict[str, str] = {}
-    for ln in out.splitlines():
-        meta, path = ln.split("\t", 1)
-        res[path] = meta.split()[2]
-    return res
-
-
-def _blob_now(relpath: str) -> str:
-    """git-style blob sha1 of the WORKING-TREE file (pure hashlib — the
-    current side must see uncommitted edits, which is the whole point)."""
-    import hashlib
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, relpath), "rb") as fh:
-        data = fh.read()
-    h = hashlib.sha1(b"blob %d\x00" % len(data))
-    h.update(data)
-    return h.hexdigest()
-
-
-def _entry_fn_closure(fn, cur_fns: dict[str, str]) -> list:
-    """``fn`` plus every top-level function of THIS module it
-    transitively references (``co_names`` walk) — so a change to a
-    shared helper like ``_k8s_events`` flags every query built on it."""
-    gl = globals()
-    seen: dict[str, object] = {getattr(fn, "__name__", ""): fn}
-    stack = [fn]
-    while stack:
-        f = stack.pop()
-        code = getattr(f, "__code__", None)
-        if code is None:
-            continue
-        for nm in code.co_names:
-            if nm in seen or nm not in cur_fns:
-                continue
-            obj = gl.get(nm)
-            if callable(obj) and getattr(obj, "__module__", "") == __name__:
-                seen[nm] = obj
-                stack.append(obj)
-    return list(seen.values())
-
-
-_STALE_CACHE: set[str] | None = None
-
-
-def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
-    """Names whose newest GREEN grade predates a change to their code
-    path (r15, VERDICT r14 task 1: ``a1_service_pod_map_sharded``
-    shipped a semantics change in r14 under a stale r13 green and the
-    age queue would not have re-graded it until ~r16).
-
-    A query is stale when, comparing HEAD's working tree against the
-    tree its newest grade actually ran on (``_grade_treeish``):
-
-    * its ``_q_`` function's source segment — or any entry-module
-      helper it transitively calls — differs, or
-    * any owning ``k8stream_spark`` module file's git blob differs.
-
-    Stale queries re-enter the red-first class in ``queries()`` and are
-    re-graded the same round the change lands; the flag self-heals once
-    the next grade records the new tree.  Any git/parse failure (or a
-    function the AST can't see) degrades to 'unchanged' — the plain r8
-    red-first rotation is the fallback, never a crash and never a
-    rotation collapse to all-red."""
-    global _STALE_CACHE
-    if _STALE_CACHE is not None:
-        return _STALE_CACHE
-    import os
-
-    stale: set[str] = set()
-    try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "__spark_entry__.py"), encoding="utf-8") as fh:
-            cur_fns = _fn_sources(fh.read())
-        alias_paths = _module_paths()
-        rounds = sorted(
-            {
-                rnd
-                for n, (rnd, green) in graded.items()
-                if green and rnd > 0 and n in reg
-            }
-        )
-        # every module file any query could own: top-level aliases PLUS
-        # in-function import targets (the ls-tree batch must cover both,
-        # or an uncovered path reads as 'changed' forever)
-        owned_by_name = {
-            name: _owned_paths(cur_fns[fname], alias_paths)
-            for name, fn in reg.items()
-            if (fname := getattr(fn, "__name__", "")) in cur_fns
-        }
-        all_paths = set(alias_paths.values()).union(*owned_by_name.values())
-        old: dict[int, tuple[dict[str, str], dict[str, str]] | None] = {}
-        blob_now: dict[str, str] = {}
-        for rnd in rounds:
-            try:
-                treeish = _grade_treeish(rnd)
-                old_fns = _fn_sources(
-                    _git_out(["show", f"{treeish}:__spark_entry__.py"])
-                )
-                old_blobs = _blobs_at(treeish, all_paths)
-                old[rnd] = (old_fns, old_blobs)
-            except Exception:
-                old[rnd] = None  # cannot tell for this round -> unchanged
-        for name, fn in reg.items():
-            rnd, green = graded.get(name, (0, False))
-            if not green or rnd == 0 or old.get(rnd) is None:
-                continue  # red/never-graded already re-grades first
-            old_fns, old_blobs = old[rnd]
-            fname = getattr(fn, "__name__", "")
-            if fname not in cur_fns:
-                continue  # not a top-level def -> cannot track
-            changed = False
-            for f in _entry_fn_closure(fn, cur_fns):
-                fnm = getattr(f, "__name__", "")
-                if cur_fns.get(fnm) != old_fns.get(fnm):
-                    changed = True
-                    break
-            if not changed:
-                for p in owned_by_name.get(name, ()):
-                    if p not in blob_now:
-                        blob_now[p] = _blob_now(p)
-                    if old_blobs.get(p) != blob_now[p]:
-                        changed = True
-                        break
-            if changed:
-                stale.add(name)
-    except Exception:
-        stale = set()
-    _STALE_CACHE = stale
-    return stale
-
-
 def _q_pq_encode(spark, sf_dir):
     return similarity.pq_encode(load_table(spark, sf_dir, "embeddings"))
 
@@ -2843,34 +2553,10 @@ def _q_reembed_worklist(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+M6 layer).
-
-    ROTATION RULE (institutionalized round 5, red-first since round 8 —
-    do not hand-order): the driver grades only the first ~50 registered
-    entries per round, so the returned dict is sorted by the key
-    ``(last_grade_was_green, grading age, registration order)`` —
-    entries whose NEWEST grade was not green (never graded, hash-red,
-    no_oracle, or hard error) sort before everything green, then
-    ascending by the newest round each name was graded in
-    (``_latest_graded_round`` over the committed CORRECTNESS_r*.json
-    files), registration order as the stable tiebreak.  A red row fixed
-    this round therefore re-grades THIS round instead of waiting out the
-    age queue (the r7 verdict showed 4 fixed-but-red rows would
-    otherwise stay red on record until round 9).  With ~140 entries and
-    a 50/round budget a green entry is re-graded at worst every ~3
-    rounds; red and newly added entries are graded the round they land.
-
-    STALENESS RULE (r15, VERDICT r14 task 1): a green entry whose code
-    path changed since its newest grade (``_changed_since_grade``: the
-    ``_q_`` function's AST source segment, any entry-module helper it
-    transitively calls, or any owning ``k8stream_spark`` module's git
-    blob differs between HEAD's working tree and the graded tree) is
-    demoted into the never-graded class, so a behavior change is
-    re-graded the round it lands instead of riding its stale green for
-    2-3 rounds.  Degrades to the plain rotation on any git failure.
-    """
-    reg = {
-        # Registration order only breaks ties within a grading-age class.
+    """One entry per implemented operator from SURVEY.md §2 (+M6 layer),
+    in registration order.  The order is fixed by this source alone;
+    callers look queries up by name."""
+    return {
         "docs_eval_contamination": _q_eval_contamination,
         "docs_source_mix_stats": _q_source_mix,
         "docs_remove_boilerplate": _q_remove_boilerplate,
@@ -3047,21 +2733,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_containment_dedup": _q_containment_dedup,
         "docs_containment_roots": _q_containment_roots,
     }
-    graded = _latest_graded_round()
-    stale = _changed_since_grade(reg, graded)
-    order = {name: i for i, name in enumerate(reg)}
-    def _key(n):
-        rnd, green = graded.get(n, (0, False))
-        if n in stale:
-            # r15 (VERDICT r14 task 1): the query's code path changed
-            # since its newest green grade — a green-on-record row may
-            # be riding a stale grade, so treat it as never graded and
-            # re-grade it THIS round instead of waiting out the age
-            # queue (r14 shipped a semantics change to
-            # a1_service_pod_map_sharded under a stale r13 green).
-            rnd, green = 0, False
-        return (green, rnd, order[n])
-    return {name: reg[name] for name in sorted(reg, key=_key)}
 
 
 #: Power-iteration steps for the PCA queries — must match the default

@@ -2259,7 +2259,8 @@ def random_projection(
     # shape made the optimizer push Generate's implicit size/isnotnull
     # filter below the projection and evaluate the (pure) matmul UDF
     # twice per row — 2 ArrowEvalPython nodes in the executed plan
-    # (plans/r15/emb_random_projection_{before,after}.txt).  The fence
+    # (`scripts/dump_plans.py <tag> emb_random_projection` shows it; the
+    # before/after dumps were committed at 37787d3).  The fence
     # yields a single evaluation: half the Python matmul CPU at any
     # scale (sf0.1 wall time is noise-bound; the plan diff is the
     # evidence).

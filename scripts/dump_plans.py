@@ -1,6 +1,7 @@
 """Dump ``explain("formatted")`` for a list of registered queries to
 ``plans/$PLANS_DIR/<query>_<tag>.txt`` (default ``plans/r16``) — the
-judge-facing before/after plan evidence for the optimization rounds.
+before/after plan evidence for an optimization.  ``plans/`` is
+git-ignored: regenerate the dumps instead of committing them.
 
 ``_cache.EAGER`` is flipped off so finalize-using operators return
 their LAZY plan (a checkpointed output is just an RDD scan — nothing

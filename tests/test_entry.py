@@ -3,7 +3,6 @@ every oracle key has a query; every query runs at sf0.001."""
 
 from __future__ import annotations
 
-import os
 import sys
 
 sys.path.insert(0, ".")
@@ -136,87 +135,28 @@ def test_oracle_output_types_have_spark_twins():
     )
 
 
-# ---------------------------------------------------------------------------
-# Rotation staleness (r15, VERDICT r14 task 1): a green query whose code
-# path changed since its newest grade must re-grade THIS round.
-# ---------------------------------------------------------------------------
-
-
-def test_rotation_demotes_stale_green_query(monkeypatch):
-    """A deliberately-touched green query sorts into the red-first
-    class: with its name injected into the stale set, it must appear
-    before every non-stale green entry in the returned order."""
-    graded = entrymod._latest_graded_round()
-    greens = [n for n, (rnd, g) in graded.items()
-              if g and n in entrymod.queries()]
-    assert greens, "need at least one green query on record"
-    # pick the green with the NEWEST grade — the one the age queue
-    # would re-grade last, so demotion is maximally observable
-    victim = max(greens, key=lambda n: graded[n][0])
-    monkeypatch.setattr(entrymod, "_STALE_CACHE", {victim})
-    order = list(entrymod.queries())
-    pos = {n: i for i, n in enumerate(order)}
-    # victim must precede every other green (none is stale under the
-    # injected single-name cache)
-    for n in greens:
-        if n != victim:
-            assert pos[victim] < pos[n], (victim, n)
-
-
-def test_staleness_flags_exactly_the_changed_modules(monkeypatch):
-    """End-to-end over real git history: every name the detector flags
-    must own a module file (or entry-fn source) that actually differs
-    between its grade tree and the working tree — spot-check one flagged
-    and one unflagged name when both classes exist."""
-    monkeypatch.setattr(entrymod, "_STALE_CACHE", None)
-    reg = dict.fromkeys(entrymod.queries())
-    reg = {n: entrymod.queries()[n] for n in reg}
-    graded = entrymod._latest_graded_round()
-    stale = entrymod._changed_since_grade(reg, graded)
-    # sanity: the detector never flags red/never-graded names (they
-    # already re-grade first) and never flags names outside the registry
-    for n in stale:
-        rnd, green = graded.get(n, (0, False))
-        assert green and rnd > 0 and n in reg, n
-
-
-def test_staleness_degrades_to_empty_on_git_failure(monkeypatch):
-    """Any git failure must fall back to the plain rotation (empty
-    stale set), never crash and never flag everything red."""
-    monkeypatch.setattr(entrymod, "_STALE_CACHE", None)
-    def boom(args):
-        raise RuntimeError("no git here")
-    monkeypatch.setattr(entrymod, "_git_out", boom)
-    graded = entrymod._latest_graded_round()
-    stale = entrymod._changed_since_grade(
-        {n: f for n, f in entrymod.queries().items()}, graded
-    )
-    assert stale == set()
-
-
-def test_owned_paths_attribution():
-    """In-function `from k8stream_spark... import X` resolves to the
-    submodule file, not the package __init__ (the greedy-regex bug
-    class), and top-level aliases resolve to their module files."""
-    cur_fns = entrymod._fn_sources(
-        open(entrymod.__file__, encoding="utf-8").read()
-    )
-    alias_paths = entrymod._module_paths()
-    owned = entrymod._owned_paths(cur_fns["_q_bm25_topk"], alias_paths)
-    assert "k8stream_spark/analytics/retrieval.py" in owned
-    assert not any(p.endswith("__init__.py") for p in owned), owned
-    owned2 = entrymod._owned_paths(cur_fns["_q_ivf_pq_topk"], alias_paths)
-    assert "k8stream_spark/analytics/similarity.py" in owned2
-
-
-def test_blob_now_matches_git_hash_object():
-    """_blob_now must compute the exact git blob sha (the comparison
-    against ls-tree output depends on it)."""
+def test_queries_is_a_pure_registry(monkeypatch):
+    """``queries()`` returns its registration literal as it is: it spawns
+    no process (no git), and two calls give the same names in the same
+    order.  A name written twice in the literal would silently drop one
+    query from the dict, so the uniqueness check reads the source."""
+    import inspect
+    import re
     import subprocess
 
-    rel = "k8stream_spark/__init__.py"
-    expect = subprocess.run(
-        ["git", "hash-object", rel], capture_output=True, text=True,
-        cwd=os.path.dirname(entrymod.__file__), check=True,
-    ).stdout.strip()
-    assert entrymod._blob_now(rel) == expect
+    spawned = []
+
+    def record(*args, **kwargs):
+        spawned.append(args)
+
+    monkeypatch.setattr(subprocess, "run", record)
+    monkeypatch.setattr(subprocess, "Popen", record)
+    first = list(entrymod.queries())
+    second = list(entrymod.queries())
+    assert spawned == []
+    assert first == second
+    written = re.findall(
+        r'^\s+"(\w+)": _q_\w+,$', inspect.getsource(entrymod.queries), re.M
+    )
+    assert len(written) == len(set(written))
+    assert written == first
