@@ -9,7 +9,10 @@ Every knob here is chosen for the 100 TB posture:
     time on big inputs.
   * ``spark.sql.shuffle.partitions`` defaults to the constant 32 (matching
     the local[32] test harness); at cluster scale AQE's coalescing makes the
-    initial number a ceiling rather than a tuning knob.
+    initial number a ceiling rather than a tuning knob.  Streaming state is
+    the exception: AQE does not coalesce a stateful operator's partitions,
+    so the streaming pipelines start their queries with one state partition
+    per core (``defaultParallelism``, streaming/pipeline.py).
   * Arrow enabled — every pandas_udf / mapInPandas boundary is Arrow-batched.
   * Session timezone pinned UTC so event-time semantics are stable and the
     DuckDB oracle (UTC-naive timestamps) compares cleanly.

@@ -12,9 +12,13 @@ only binds them to ``readStream`` and a sink.
 
 Scale posture: the static dims are re-read every micro-batch (the
 reference's 3600 s cache TTL analog); dedup state lives in the RocksDB
-state store (session.py); sink writes go through the vectorized JSON
-writer.  The exact count-or-time flush (W1) runs inside foreachBatch via
-``Batcher`` semantics — Spark's trigger covers the time half natively.
+state store (session.py), one state partition per core
+(``defaultParallelism``).  The exact count-or-time flush (W1) runs
+inside foreachBatch via ``Batcher`` semantics — Spark's trigger covers
+the time half natively.  ``sink_foreach_batch`` collects each
+micro-batch to the driver in one job, so the driver holds one
+micro-batch at a time; ``distributed_json_sink`` is the path for scale,
+where every partition writes in parallel and nothing reaches the driver.
 """
 
 from __future__ import annotations
@@ -166,17 +170,9 @@ def run_unified_pipeline(
     )
     svc_l9 = transform_services(services, namespaces=namespaces)
     unified = joins.union_streams(ev_l9, svc_l9)
-
-    writer = (
-        unified.writeStream.outputMode("append")
-        .foreachBatch(sink_fn)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        spark, unified, sink_fn, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def transform_events(
@@ -246,23 +242,22 @@ def sink_foreach_batch(
 ):
     """foreachBatch function: rechunk the micro-batch into reference-sized
     flush units (the count half of W1) and hand each to the Flusher as
-    NDJSON — one artifact per chunk, named by a nanosecond ident (W2).
+    NDJSON — one artifact per chunk, in frame order, named by a
+    nanosecond ident (W2).  An empty micro-batch flushes nothing.
 
-    NOTE on scale: this driver-side path exists for reference-parity
-    sinks (one named object per batch).  The throughput path at 100 TB is
+    The micro-batch reaches the driver through one ``collect()`` — one
+    Spark job, where a per-partition iterator would run one job per
+    partition in turn — so the driver holds one whole micro-batch.  This
+    driver-side path exists for reference-parity sinks (one named object
+    per chunk); the throughput path at 100 TB is
     ``batch_df.write.json(path)`` — fully distributed — which callers get
     by passing ``distributed_json_sink`` instead.
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (r.asDict(recursive=True) for r in batch_df.toLocalIterator())
-        chunk: list[dict] = []
-        for row in rows:
-            chunk.append(row)
-            if len(chunk) >= batch_size:
-                flusher.flush(uid, time.time_ns(), ndjson_bytes(chunk))
-                chunk = []
-        if chunk:
+        rows = [r.asDict(recursive=True) for r in batch_df.collect()]
+        for i in range(0, len(rows), batch_size):
+            chunk = rows[i : i + batch_size]
             flusher.flush(uid, time.time_ns(), ndjson_bytes(chunk))
 
     return fn
@@ -392,9 +387,31 @@ def run_pipeline(
     l9 = transform_events(
         events, objects, nodes, namespaces=namespaces, reasons=reasons
     )
+    return _start(
+        spark, l9, sink_fn, checkpoint_dir, trigger_seconds, available_now
+    )
 
+
+def _start(
+    spark: SparkSession,
+    frame: DataFrame,
+    sink_fn,
+    checkpoint_dir: str,
+    trigger_seconds: int | None,
+    available_now: bool,
+):
+    """Start ``frame`` as an append-mode foreachBatch query.
+
+    The streaming dedup state gets one partition per core: each state
+    partition is a state-store task on every trigger, so the session's
+    ``spark.sql.shuffle.partitions`` (sized for batch shuffles) would make
+    a trigger's fixed cost grow with that constant, not with the events it
+    carries.  The query clones the session conf inside ``start()``, so the
+    session's own value is restored right after.  Spark records the count
+    in the checkpoint: a restarted query keeps the count it started with.
+    """
     writer = (
-        l9.writeStream.outputMode("append")
+        frame.writeStream.outputMode("append")
         .foreachBatch(sink_fn)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -402,4 +419,10 @@ def run_pipeline(
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, session_value)

@@ -8,11 +8,18 @@ import gzip
 import json
 import os
 
+import pytest
+
 from k8stream_spark.io.sinks import MemorySink
 from k8stream_spark.streaming.pipeline import (
+    build_event_stream,
     run_pipeline,
+    run_unified_pipeline,
     sink_foreach_batch,
+    transform_events,
 )
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def _write_events(path: str) -> None:
@@ -121,8 +128,6 @@ def _write_services(path: str) -> None:
 def test_unified_pipeline_unions_both_streams(
     spark, objects_df, nodes_df, tmp_path
 ):
-    from k8stream_spark.streaming.pipeline import run_unified_pipeline
-
     ev_src = str(tmp_path / "ev_src")
     svc_src = str(tmp_path / "svc_src")
     _write_events(ev_src)
@@ -155,6 +160,139 @@ def test_unified_pipeline_unions_both_streams(
     assert svc["reference_version"] == "10"
     # event rows keep their enrichment through the union
     assert by_id["e1"]["pod_name"] == "pod-1"
+
+
+class _Recorder:
+    """A Flusher that keeps every flush in call order.  ``MemorySink``
+    keys flushes by ident, so two flushes in one nanosecond would
+    overwrite each other there."""
+
+    def __init__(self) -> None:
+        self.flushes: list[list[dict]] = []
+
+    def flush(self, uid: str, ident: int, data: bytes) -> str:
+        self.flushes.append([json.loads(l) for l in data.decode().splitlines()])
+        return f"recorder://{uid}/{ident}"
+
+    def rows(self) -> list[dict]:
+        return [r for chunk in self.flushes for r in chunk]
+
+
+def test_sink_foreach_batch_rechunks_in_frame_order(spark):
+    """The count half of W1: a micro-batch is cut into flushes of
+    ``batch_size`` rows plus the remainder, every row exactly once and in
+    frame order across partitions; an empty micro-batch flushes nothing."""
+    schema = "n int, message string"
+    frame = spark.createDataFrame([(i, f"m{i}") for i in range(25)], schema)
+    assert frame.rdd.getNumPartitions() > 1
+    rec = _Recorder()
+    fn = sink_foreach_batch(rec, uid="rechunk", batch_size=10)
+
+    fn(frame, 0)
+    assert [len(chunk) for chunk in rec.flushes] == [10, 10, 5]
+    assert rec.rows() == [{"n": i, "message": f"m{i}"} for i in range(25)]
+
+    fn(spark.createDataFrame([], schema), 1)
+    assert len(rec.flushes) == 3
+
+
+@pytest.mark.parametrize("unified", [False, True], ids=["events", "unified"])
+def test_stream_state_partitions_follow_default_parallelism(
+    spark, objects_df, nodes_df, tmp_path, unified
+):
+    """A new query's dedup state gets one partition per core whatever the
+    session's batch shuffle-partition count, and the session keeps its
+    own count."""
+    ev_src = str(tmp_path / "ev_src")
+    _write_events(ev_src)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != 7
+    session_value = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "7")
+    try:
+        common = dict(
+            objects=objects_df,
+            nodes=nodes_df,
+            sink_fn=sink_foreach_batch(_Recorder(), uid="state-partitions"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        if unified:
+            svc_src = str(tmp_path / "svc_src")
+            _write_services(svc_src)
+            q = run_unified_pipeline(spark, ev_src, svc_src, **common)
+        else:
+            q = run_pipeline(spark, ev_src, **common)
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "7"
+        assert q.awaitTermination(120)
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == "7"
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, session_value)
+    states = q.lastProgress["stateOperators"]
+    assert len(states) == (2 if unified else 1)
+    assert [s["numShufflePartitions"] for s in states] == [cores] * len(states)
+
+
+def test_restart_keeps_checkpointed_state_partitions(
+    spark, objects_df, nodes_df, tmp_path
+):
+    """A checkpoint whose dedup state was written with 7 partitions (a
+    query started under the session's own count) restarts through
+    ``run_pipeline`` with those 7 partitions and its dedup state intact:
+    each newly appended event is emitted exactly once, and a repeat of
+    an event seen before the restart is dropped."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    _write_events(src)
+    session_value = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "7")
+    try:
+        before = _Recorder()
+        q = (
+            transform_events(build_event_stream(spark, src), objects_df, nodes_df)
+            .writeStream.outputMode("append")
+            .foreachBatch(sink_foreach_batch(before, uid="before"))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, session_value)
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 7
+    assert sorted(r["id"] for r in before.rows()) == ["e1", "e3"]
+
+    def event(uid: str, ts: str, message: str) -> dict:
+        return dict(uid=uid, creation_ts=ts, namespace="default",
+                    reason="Scheduled", message=message,
+                    source_component="sched", source_host="node-a",
+                    ref_uid="o1", ref_name="pod-1", ref_namespace="default",
+                    ref_kind="Pod", ref_api_version="v1")
+
+    appended = [
+        event("e1", "2024-01-01T00:00:00", "m1"),  # held by restored state
+        event("e4", "2024-01-01T00:00:06", "m4"),
+        event("e5", "2024-01-01T00:00:07", "m5"),
+        event("e4", "2024-01-01T00:00:08", "m4-dup"),
+    ]
+    with open(os.path.join(src, "events-2.json"), "w") as f:
+        for e in appended:
+            f.write(json.dumps(e) + "\n")
+    after = _Recorder()
+    q = run_pipeline(
+        spark,
+        src,
+        objects_df,
+        nodes_df,
+        sink_fn=sink_foreach_batch(after, uid="after"),
+        checkpoint_dir=ckpt,
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 7
+    got = sorted((r["id"], r["message"]) for r in after.rows())
+    assert got == [("e4", "m4"), ("e5", "m5")]
 
 
 def test_service_stream_keep_latest_drops_older(spark, tmp_path):
@@ -251,8 +389,6 @@ def test_unified_pipeline_on_informer_sources(
     """Both streams of the unified pipeline read through the custom
     k8s_informer source (event AND service kinds) — same output as the
     file-source binding."""
-    from k8stream_spark.streaming.pipeline import run_unified_pipeline
-
     ev_src = str(tmp_path / "ev_src")
     svc_src = str(tmp_path / "svc_src")
     _write_events(ev_src)
